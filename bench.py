@@ -127,7 +127,6 @@ HEADLINE = [
     "embeddings_pq",
     "similarity_pq_adc",
     # r9 additions
-    "corpus_incremental_ingest_bloom",
     "corpus_bpe_pair_counts",
     "embeddings_pca",
     # r10 additions

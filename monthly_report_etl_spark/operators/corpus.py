@@ -1106,134 +1106,6 @@ def incremental_ingest_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Bloom sizing: ~10 bits/key with 7 probes gives ~0.8% false-positive
-# rate (the textbook k = m/n ln2 optimum for 10 bits/key). The floor
-# keeps tiny fixture corpora from degenerating to an always-saturated
-# bitmap (m < n*K sets every bit and prunes nothing).
-BLOOM_BITS_PER_KEY = 10
-BLOOM_HASHES = 7
-BLOOM_MIN_BITS = 1 << 13
-
-
-def _bloom_positions(m: int):
-    """The K bit positions of key (k, klen) as a pure expression array —
-    classic double hashing pos_i = (h1 + i*h2) mod m over two
-    independent xxhash64 draws (the salt literal decouples them), all
-    inside codegen; ANSI off (pinned per-query by catalog semantics)
-    lets the i*h2 multiply wrap like the MinHash permutations do."""
-    h1 = F.xxhash64("k", "klen")
-    h2 = F.xxhash64("k", "klen", F.lit("bloom-salt-2"))
-    return F.array(
-        *[F.pmod(h1 + F.lit(i) * h2, F.lit(m)).alias(f"p{i}") for i in range(BLOOM_HASHES)]
-    )
-
-
-def _bloom_candidates(incoming: DataFrame, existing: DataFrame, m: int) -> DataFrame:
-    """Bloom pre-filter probe: the ``incoming`` doc_ids whose key
-    (k, klen) has ALL ``BLOOM_HASHES`` bits set in the filter built from
-    ``existing``'s keys (true duplicates + the ~0.8% false-positive
-    residue). Shared by ``incremental_ingest_bloom`` and the
-    no-false-negative property test (ADVICE r9 #4: the test must probe
-    the real operator path, not its own copy).
-
-    The bit set is PACKED into 64-bit words before it moves: position →
-    (word = pos >> 6, mask = 1 << (pos & 63)), ``bit_or`` aggregate per
-    word. The word table is still corpus-proportional — ~10 bits/key is
-    ~1.25 bytes/key no matter how it is laid out — but packing cuts the
-    row count 64× vs one row per set bit (≈0.16 words/key vs ≈10
-    positions/key pre-distinct), and the join on ``w`` is left to AQE:
-    broadcast while the packed table is small, shuffle-hash on the
-    8-byte word index once the corpus outgrows the broadcast bound
-    (at 2e10 keys the packed table is ~25 GB — a forced broadcast
-    would be a hard failure there, see VERDICT r9 #1)."""
-    pos = _bloom_positions(m)
-    words = (
-        existing.select(F.explode(pos).alias("pos"))
-        .select(
-            F.shiftright("pos", 6).alias("w"),
-            F.expr("shiftleft(1L, CAST(pos % 64 AS INT))").alias("b"),
-        )
-        .groupBy("w")
-        .agg(F.bit_or("b").alias("bits"))
-    )
-    probes = incoming.select("doc_id", F.explode(pos).alias("pos")).select(
-        "doc_id",
-        F.shiftright("pos", 6).alias("w"),
-        F.expr("shiftleft(1L, CAST(pos % 64 AS INT))").alias("mask"),
-    )
-    return (
-        probes.join(words, "w")
-        .filter(F.expr("(bits & mask) <> 0"))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_hits"))
-        .filter(F.col("n_hits") == BLOOM_HASHES)
-        .select("doc_id")
-    )
-
-
-def incremental_ingest_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``incremental_ingest`` behind a Bloom pre-filter — the join-free
-    fast path a 100 TB ingest runs first (the CCNet/Dolma URL-dedup
-    shape): keys whose K bloom bits are not all set are DEFINITELY new
-    and skip the anti-join entirely; only the "maybe present" residue
-    (true dups + ~0.8% false positives) probes the exact key join. The
-    final result is therefore BIT-IDENTICAL to the exact anti-join —
-    same oracle SQL as the other two ingest variants — because the
-    bloom only ever routes rows, never decides them: no false negatives
-    by construction (every existing key set its own bits), and false
-    positives are re-checked exactly.
-
-    Scale shape, all JVM-side (zero Python):
-
-    * build: existing keys → K bit positions (codegen expression array)
-      → explode → pack into 64-bit words (``pos >> 6`` + ``bit_or``
-      aggregate; map-side partial OR caps each mapper's emit at m/64
-      words). The packed table is CORPUS-PROPORTIONAL — ~10 bits/key ≈
-      1.25 B/key however it is stored — but 64× fewer rows than the
-      one-row-per-set-bit form, and at steady state it is persisted
-      next to the bucketed key table and amortized across daily ingests
-      (like ``_existing_keys_table``), so the build cost is paid once;
-    * probe: incoming explodes to K (word, mask) probes and joins the
-      word table on the 8-byte ``w`` index — NOT force-broadcast: AQE
-      broadcasts while the packed table fits (any fixture scale) and
-      falls back to a shuffle-hash join on ``w`` when the corpus
-      outgrows the bound (~25 GB at 2e10 keys). A key is a candidate
-      iff all K probes hit a set bit (count == K). The dataflow is a
-      LINEAR chain — candidates → semi-join existing = confirmed dups →
-      ONE doc_id anti-join back on incoming — so the bits/probe subtree
-      executes exactly once (a branch-and-union form would mirror it
-      into both branches; the incoming scan is read twice instead,
-      which is the cheap side);
-    * the in-batch min-doc_id dedup is unchanged. The candidate /
-      confirmed-dup doc_id lists are batch-proportional, so they are
-      also left to AQE rather than force-broadcast (a 100 TB daily
-      batch's dup list can itself exceed the broadcast bound).
-
-    Pruning is measured, not assumed: ``test_properties.py``'s
-    differential asserts candidates < incoming and result == exact,
-    through THIS function's ``_bloom_candidates``."""
-    d = _docs(spark, sf_dir)
-    key = [F.sha2(F.col("text"), 256).alias("k"), F.length("text").alias("klen")]
-    incoming = d.filter(F.col("source") == INGEST_SOURCE).select("doc_id", *key)
-    existing = d.filter(F.col("source") != INGEST_SOURCE).select(*key)
-
-    n_existing = existing.count()  # scalar model sizing (bloom width)
-    m = max(BLOOM_MIN_BITS, n_existing * BLOOM_BITS_PER_KEY)
-
-    candidates = _bloom_candidates(incoming, existing, m)
-    confirmed_dups = (
-        incoming.join(candidates, "doc_id", "left_semi")
-        .join(existing, ["k", "klen"], "left_semi")
-        .select("doc_id")
-    )
-    fresh = incoming.join(confirmed_dups, "doc_id", "left_anti")
-    return (
-        fresh.groupBy("k", "klen")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-
-
 # ---------------------------------------------------------------------------
 # per-source length-outlier trimming
 # ---------------------------------------------------------------------------
@@ -2390,10 +2262,6 @@ CATALOG: dict[str, tuple] = {
     "corpus_incremental_ingest": (incremental_ingest, INCREMENTAL_INGEST_ORACLE),
     "corpus_incremental_ingest_bucketed": (
         incremental_ingest_bucketed,
-        INCREMENTAL_INGEST_ORACLE,
-    ),
-    "corpus_incremental_ingest_bloom": (
-        incremental_ingest_bloom,
         INCREMENTAL_INGEST_ORACLE,
     ),
     "corpus_bpe_pair_counts": (bpe_pair_counts, BPE_PAIR_ORACLE),

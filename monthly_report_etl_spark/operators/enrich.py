@@ -138,26 +138,3 @@ def clean_for_export(df: DataFrame, none_literal: bool = True) -> DataFrame:
             out = out.withColumn(c, F.col(c).cast("double"))
     return out
 
-
-def quality_warnings(df: DataFrame) -> DataFrame:
-    """F17 — the reference's dirty-string QA prints (:61-67) as a tiny
-    aggregate report: per column, how many rows still contain commas or
-    JSON-ish wrappers after cleaning."""
-    aggs = []
-    for c in STRING_CLEAN_COLUMNS:
-        if c in df.columns:
-            aggs.append(
-                F.sum(F.col(c).rlike(",").cast("int")).alias(f"{c}_commas")
-            )
-            aggs.append(
-                F.sum(F.col(c).rlike(r"[\[\{].*[\]\}]").cast("int")).alias(f"{c}_jsonish")
-            )
-    return df.agg(*aggs)
-
-
-def null_profile(df: DataFrame) -> DataFrame:
-    """P9/A7 — per-column null counts (run_exports_query.py:232) as one
-    aggregate row instead of a driver-side ``isnull().sum()``."""
-    return df.agg(
-        *[F.sum(F.col(c).isNull().cast("long")).alias(c) for c in df.columns]
-    )

@@ -30,10 +30,14 @@ def get_spark(
     * ``spark.sql.ansi.enabled=false`` — the reference coerces with
       ``pd.to_numeric(errors='coerce')`` (run_exports_query.py:69-71);
       non-ANSI ``cast`` nulls on failure instead of raising.
-    * AQE on — runtime coalescing of the 32-way local shuffles and skew-join
+    * AQE on — runtime coalescing of the local shuffles and skew-join
       splitting at cluster scale.
+
+    Without an explicit ``master`` the session runs ``local[n]`` with one
+    task slot per host core (``os.cpu_count()``); ``SPARK_GRAFT_CPUS``
+    overrides n. The shuffle partition count defaults to the same n.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

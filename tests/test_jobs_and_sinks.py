@@ -483,3 +483,46 @@ def test_xlsx_reader_handles_rless_cells_and_absolute_targets(tmp_path):
         ["a", None, "c"],
         ["d", "e", "f"],
     ]
+
+
+def test_get_spark_default_master_follows_host_cores(monkeypatch):
+    """Without an explicit master, get_spark sizes ``local[n]`` and the
+    shuffle partition count from the host's core count, not a fixed
+    32-way default; SPARK_GRAFT_CPUS still overrides n."""
+    from monthly_report_etl_spark import session
+
+    seen: dict[str, str] = {}
+
+    class FakeSession:
+        class sparkContext:
+            @staticmethod
+            def setLogLevel(level):
+                pass
+
+    class FakeBuilder:
+        def appName(self, name):
+            return self
+
+        def master(self, master):
+            seen["master"] = master
+            return self
+
+        def config(self, key, value):
+            seen[key] = value
+            return self
+
+        def getOrCreate(self):
+            return FakeSession()
+
+    monkeypatch.setattr(session.SparkSession, "builder", FakeBuilder())
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 3)
+    session.get_spark()
+    assert seen["master"] == "local[3]"
+    assert seen["spark.sql.shuffle.partitions"] == "3"
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    session.get_spark()
+    assert seen["master"] == "local[2]"
+    assert seen["spark.sql.shuffle.partitions"] == "2"

@@ -793,43 +793,6 @@ def test_semdedup_gram_kernel_engages_at_scale(spark, tmp_path):
     )
 
 
-def test_bloom_ingest_plan(spark, sf_dir):
-    """corpus_incremental_ingest_bloom keeps its scale contract
-    (re-pinned for the r10 packed/adaptive shape, VERDICT r9 #1): the
-    whole dataflow is JVM expressions (no Python stage anywhere — the
-    bloom probes are codegen xxhash64 arithmetic), the bit set is
-    PACKED into 64-bit words by a ``bit_or`` aggregate before it moves
-    (never shipped one-row-per-set-bit), NO join side is force-broadcast
-    (the word table and the dup lists are corpus/batch-proportional —
-    broadcast is AQE's runtime call, so the static plan must keep the
-    shuffle form available rather than hint it away), and the
-    candidate-probe subtree appears exactly ONCE — the r9 review caught
-    a branch-and-union form that mirrored the bits build + probe into
-    both branches (two Generates per subtree => four total); the linear
-    confirmed-dups chain keeps it at two (bits build + incoming
-    probe)."""
-    import re
-
-    df = QUERIES["corpus_incremental_ingest_bloom"](spark, sf_dir)
-    plan = _plan(df)
-    assert "BatchEvalPython" not in plan and "EvalPython" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "bit_or" in plan, f"bit set not packed into words:\n{plan}"
-    # AQE must own the broadcast decision: a stats-driven broadcast of
-    # the small fixture scan is fine (and will appear), but no join may
-    # carry a planner-FORCED strategy hint — a hinted broadcast of the
-    # corpus-proportional word table or the batch-proportional dup
-    # lists cannot be downgraded at 100 TB. Hints survive analysis as
-    # ResolvedHint nodes in the analyzed logical plan, so absence there
-    # proves no forced strategy anywhere in the tree.
-    analyzed = df._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" not in analyzed, (
-        f"forced join-strategy hint in bloom ingest:\n{analyzed}"
-    )
-    n_gen = len([l for l in plan.splitlines() if re.match(r"\(\d+\) Generate", l)])
-    assert n_gen == 2, f"probe subtree duplicated ({n_gen} Generates):\n{plan}"
-
-
 def test_catalog_wide_plan_hygiene(spark, sf_dir):
     """r9 consolidation sweep: EVERY catalog entry's physical plan is
     free of the two unconditional scale-killers —

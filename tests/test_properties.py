@@ -253,49 +253,6 @@ def test_semdedup_kernels_agree_on_random_vectors(spark, vecs, n_buckets):
             assert abs(fc - gc) <= 1e-6, f"vec {vid}: nn fold={fc} gram={gc}"
 
 
-def test_bloom_ingest_matches_exact_and_prunes(spark, sf_dir):
-    """The Bloom pre-filtered ingest must be BIT-IDENTICAL to the exact
-    anti-join (the bloom routes rows, never decides them), and the
-    pre-filter must actually prune: the candidate set entering the exact
-    join is a strict subset of the incoming batch and contains every
-    true duplicate (no false negatives — an existing key always finds
-    its own bits set). Also measures the false-positive residue against
-    the ~0.8% design rate (assert a loose 10x bound; at fixture scale
-    the floor-sized bitmap makes the rate conservative-low). The
-    candidate set probed here is the OPERATOR's own ``_bloom_candidates``
-    (ADVICE r9 #4: a copy-pasted rebuild would test the test, not the
-    code — pruning/no-false-negative now bind to the real probe path)."""
-    from monthly_report_etl_spark.operators import corpus as C
-
-    exact = {
-        r["doc_id"] for r in C.incremental_ingest(spark, sf_dir).collect()
-    }
-    bloom = {
-        r["doc_id"]
-        for r in C.incremental_ingest_bloom(spark, sf_dir).collect()
-    }
-    assert bloom == exact
-
-    d = C._docs(spark, sf_dir)
-    key = [F.sha2(F.col("text"), 256).alias("k"), F.length("text").alias("klen")]
-    incoming = d.filter(F.col("source") == C.INGEST_SOURCE).select("doc_id", *key)
-    existing = d.filter(F.col("source") != C.INGEST_SOURCE).select(*key)
-    n_in = incoming.count()
-    n_existing = existing.count()
-    m = max(C.BLOOM_MIN_BITS, n_existing * C.BLOOM_BITS_PER_KEY)
-    candidates = C._bloom_candidates(incoming, existing, m)
-    cand = {r["doc_id"] for r in candidates.collect()}
-    true_dups = {
-        r["doc_id"]
-        for r in incoming.join(existing, ["k", "klen"], "left_semi").collect()
-    }
-    assert true_dups <= cand, "false negative: a real dup bypassed the check"
-    assert len(cand) < n_in, "bloom pruned nothing"
-    fp = len(cand) - len(true_dups)
-    n_new = n_in - len(true_dups)
-    assert n_new == 0 or fp / n_new <= 0.08, (fp, n_new)
-
-
 @settings(**_SETTINGS)
 @given(
     words=st.lists(

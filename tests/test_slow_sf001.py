@@ -31,7 +31,6 @@ SF001_DIR = "/root/testdata/sf0.01"
 # differential).
 HEAVIEST = [
     "similarity_pq_adc",
-    "corpus_incremental_ingest_bloom",
     "embeddings_pca",
     "dedup_prefix_jaccard",
     "dedup_simhash",

@@ -444,7 +444,7 @@ def main() -> int:
         print(f"{corner}: {len(ENTRIES) - len(bad)}/{len(ENTRIES)} ok; "
               f"bad: {bad}", flush=True)
         failures += len(bad)
-    # Threshold: across the full family (~11 corners x 141 entries =
+    # Threshold: across the full family (~11 corners x 140 entries =
     # ~1550 gate executions) the observed historical transient rate is
     # zero-to-low single digits; more than 3 in one run means something
     # nondeterministic is loose and deserves a human eye, not a pass.

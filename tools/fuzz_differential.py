@@ -550,7 +550,7 @@ ENTRIES = [
     # (= INGEST_SOURCE) so the incoming batch is non-empty.
     "union_by_name", "jsonl_roundtrip_docs",
     "corpus_incremental_ingest", "corpus_incremental_ingest_bucketed",
-    "corpus_incremental_ingest_bloom", "corpus_incremental_ingest_neardup",
+    "corpus_incremental_ingest_neardup",
     "corpus_incremental_ingest_neardup_bucketed",
     "multimodal_byte_stats", "upsert_full_outer", "topk_orders",
     "month_membership_filter",

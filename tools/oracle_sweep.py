@@ -5,7 +5,7 @@ depend on scratch files surviving between sessions).
 
 Two standing modes:
 
-  python tools/oracle_sweep.py            # all 148 entries (full sweep)
+  python tools/oracle_sweep.py            # all 147 entries (full sweep)
   python tools/oracle_sweep.py --window   # the declared driver window
                                           # (first 50 = _DRIVER_WINDOW_PRIORITY)
 

@@ -1,7 +1,7 @@
 """Global-window audit (VERDICT r20 next #4): find every catalog entry
 whose physical plan contains a Window/WindowGroupLimit over an EMPTY
 partition spec — the `WindowExec: No Partition Defined ... moving all
-data to a single partition` warning the full-148 sweep logs show — and
+data to a single partition` warning the full-catalog sweep logs show — and
 report the producing expression so each one can be adjudicated
 (model-/report-bounded input: fine; input-scale: a 100 TB scale bug).
 
