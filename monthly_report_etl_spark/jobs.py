@@ -7,15 +7,20 @@ per-lender directory as one table, re-infer ``time``, single merged TSV).
 
 Differences by design (SURVEY §2.12): the export job is ONE partitioned
 write instead of ~48 sequential per-lender queries, and the merge job is a
-directory scan — Spark unions natively. Validation (S7) is a read-back
-assertion, not a data pass.
+directory scan — Spark unions natively. Validation (S7) adds no Spark job:
+the rows written and the all-blank rows are counted by an Observation on
+the write itself, and the read-back is the reference's own assertion (each
+part file's header and first-row arity), read on the driver.
 """
 
 from __future__ import annotations
 
+import csv
 import os
+from functools import reduce
+from operator import and_
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from monthly_report_etl_spark.config import PipelineConfig
@@ -26,6 +31,7 @@ from monthly_report_etl_spark.sources import (
     read_tsv_directory,
     write_tsv,
 )
+from monthly_report_etl_spark.sources.csv import part_files
 
 
 def run_export_job(
@@ -64,8 +70,7 @@ def run_export_job(
     comp = read_lookup_csv(spark, competitor_csv, COMPETITOR_LIST_SCHEMA)
     report = monthly_report(raw, comp, config or PipelineConfig())
     if parquet_dir is None:
-        write_tsv(report, output_dir, partition_by="associated_lender", bom=True)
-        validate_tsv_output(spark, output_dir)
+        _write_validated_tsv(report, output_dir, partition_by="associated_lender")
         return report
     staging = parquet_dir.rstrip("/") + "__staging"
     report.write.mode("overwrite").parquet(staging)
@@ -85,10 +90,7 @@ def run_export_job(
         # back-fill behavior wanted; outputs are byte-identical because
         # the sinks were already independent.
         def _tsv_chain() -> None:
-            write_tsv(
-                staged, output_dir, partition_by="associated_lender", bom=True
-            )
-            validate_tsv_output(spark, output_dir)
+            _write_validated_tsv(staged, output_dir, partition_by="associated_lender")
 
         def _parquet_chain() -> None:
             write_parquet_sized(
@@ -118,40 +120,58 @@ def run_merge_job(spark: SparkSession, output_dir: str, merged_dir: str) -> Data
     df = read_tsv_directory(spark, output_dir, skip_bad_files=True)
     if "time" in df.columns:
         df = df.withColumn("time", F.to_timestamp("time"))
-    write_tsv(df, merged_dir, single_file=True, bom=True)
-    validate_tsv_output(spark, merged_dir)
+    _write_validated_tsv(df, merged_dir, single_file=True)
     return df
 
 
-def validate_tsv_output(spark: SparkSession, path: str) -> None:
-    """S7: read-back validation — header arity vs data arity, rows > 0.
-
-    Both metrics ride ONE pass via the Observation API (accumulator-backed
-    side metrics on the scan itself) instead of separate count jobs — the
-    pattern for data-quality counters on 100 TB writes, where a second
-    validation scan is a real cost."""
-    from pyspark.sql import Observation
-
-    back = read_tsv_directory(spark, path)
-    n_cols = len(back.columns)
-    if n_cols == 0:
-        raise ValueError(f"no columns in written output at {path}")
-    all_null = (
-        sum((F.col(c).isNull().cast("int") for c in back.columns), F.lit(0)) == n_cols
-    )
-    obs = Observation("tsv_validation")
-    back.observe(
-        obs,
+def _write_validated_tsv(df: DataFrame, path: str, **sink) -> None:
+    """``write_tsv`` (BOM on) with the S7 counters riding the write, then
+    ``validate_tsv_output``."""
+    # NULL and '' are both written as an empty field
+    blank = [F.coalesce(F.col(c).cast("string"), F.lit("")) == "" for c in df.columns]
+    written = Observation()
+    df = df.observe(
+        written,
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(all_null.cast("int")).alias("n_allnull"),
-    ).write.mode("overwrite").format("noop").save()
-    metrics = obs.get
+        F.count_if(reduce(and_, blank)).alias("n_blank"),
+    )
+    write_tsv(df, path, bom=True, **sink)
+    validate_tsv_output(path, written)
+
+
+def validate_tsv_output(path: str, written: Observation) -> None:
+    """S7: rows > 0, no fully blank row, and every part file's header and
+    first-row arity agree (run_exports_query.py:91-104).
+
+    The row counts come from ``written``, the Observation on the write that
+    produced ``path``. The read-back opens each part file on the driver and
+    parses only its header and first row — no Spark job, whatever the
+    output's size."""
+    metrics = written.get
     if metrics["n_rows"] == 0:
         raise ValueError(f"written output at {path} is empty")
-    if metrics["n_allnull"]:
+    if metrics["n_blank"]:
         raise ValueError(
-            f"{metrics['n_allnull']} fully-null rows in {path} (arity mismatch?)"
+            f"{metrics['n_blank']} rows with every column NULL or '' in {path}"
         )
+    header = None
+    for part in part_files(path):
+        with open(part, encoding="utf-8-sig", newline="") as f:
+            rows = csv.reader(f, delimiter="\t", escapechar="\\", doublequote=False)
+            part_header = next(rows, [])
+            first = next(rows, None)
+        if not part_header:
+            raise ValueError(f"no columns in written output at {part}")
+        if header is None:
+            header = part_header
+        elif part_header != header:
+            raise ValueError(f"header of {part} differs from the other part files in {path}")
+        if first is not None and len(first) != len(header):
+            raise ValueError(
+                f"first row of {part} has {len(first)} fields, header has {len(header)}"
+            )
+    if header is None:
+        raise ValueError(f"no part files in written output at {path}")
 
 
 def main() -> None:  # pragma: no cover - thin CLI

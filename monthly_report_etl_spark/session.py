@@ -32,6 +32,9 @@ def get_spark(
       non-ANSI ``cast`` nulls on failure instead of raising.
     * AQE on — runtime coalescing of the local shuffles and skew-join
       splitting at cluster scale.
+    * File listing on the driver for up to 1024 directories per level —
+      the export's 48 ``associated_lender=`` directories exceed Spark's
+      default of 32, which made every read of them a 48-task listing job.
 
     Without an explicit ``master`` the session runs ``local[n]`` with one
     task slot per host core (``os.cpu_count()``); ``SPARK_GRAFT_CPUS``
@@ -56,6 +59,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # A listing job runs on this same local[n] host and reaches storage
+        # no faster than the driver does. On the export directory (local[4],
+        # 4-core host, median of 7) a header pass cost 1.52 s CPU with the
+        # default threshold of 32 and 0.22 s listed on the driver; an
+        # explicit-schema read 0.69 s and 0.02 s.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     if extra_conf:
         for k, v in extra_conf.items():

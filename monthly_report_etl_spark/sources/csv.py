@@ -69,15 +69,19 @@ def read_tsv_directory(
     (merge_all_lenders.py:46-49 drops a whole unreadable CSV with a
     warning and continues): a distributed tagging pass marks corrupt
     records with their source file, only the tiny bad-FILE list crosses
-    the driver, and every row from a bad file is excluded. With the flag
-    off, PERMISSIVE null-fills malformed rows in place.
+    the driver, and every row from a bad file is excluded. The returned
+    frame is that pass's own relation (bad files filtered out, the
+    corrupt-record column dropped), so the directory is listed and parsed
+    by one scan definition. With the flag off, PERMISSIVE null-fills
+    malformed rows in place.
 
     ``multi_line=True`` makes QUOTED EMBEDDED NEWLINES roundtrip like the
     reference's pandas reader (which handles them natively). It is off by
     default because multiLine parsing sacrifices byte-range splittability
-    (one task per file — wrong at 100 TB); in-contract data never needs
-    it, since the reference strips ``\\t\\n\\r`` before writing (F16) and
-    this engine's clean_for_export does the same.
+    (one task per file — wrong at 100 TB). Neither the reference's F16
+    strip nor this engine's clean_for_export removes whitespace (both
+    strip only ``[]{}"\\,``): QUOTE_ALL keeps embedded tabs safe on the
+    default path, and text that may hold newlines needs ``multi_line=True``.
     """
     reader = (
         spark.read.option("header", True)
@@ -96,31 +100,26 @@ def read_tsv_directory(
             reader = reader.option("inferSchema", False)
         return reader.csv(path)
 
-    explicit_columns = columns
     if columns is None:
         # header pass only (schema inference off): establish the column set
         columns = spark.read.option("header", True).option("sep", "\t").csv(path).columns
-    data_cols = [c for c in columns]
 
-    # Probe pass: re-read with an explicit corrupt-record column; a row that
+    # Probe pass: read with an explicit corrupt-record column; a row that
     # fails tokenization (quote damage) or disagrees with the file's data
     # arity marks its FILE bad. The projection keeps one real data column:
     # Spark disallows queries whose pruned schema is ONLY the corrupt column
     # (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN). Partition
-    # columns are subtracted from the data schema by the reader, so the
-    # arity check is per-file-content, as in the reference. Only distinct
-    # bad file NAMES cross the driver — bounded by file count, never data.
-    probe_schema = T.StructType(
-        [T.StructField(c, T.StringType()) for c in data_cols]
-        + [T.StructField("_corrupt_record", T.StringType())]
-    )
+    # columns are subtracted from the data schema by the reader (and typed
+    # string), so the arity check is per-file-content, as in the reference.
+    # Only distinct bad file NAMES cross the driver — bounded by file
+    # count, never data.
     probe = (
-        spark.read.option("header", True)
-        .option("sep", "\t")
-        .option("nullValue", "")
-        .option("mode", "PERMISSIVE")
-        .option("escape", "\\")
-        .schema(probe_schema)
+        reader.schema(
+            T.StructType(
+                [T.StructField(c, T.StringType()) for c in columns]
+                + [T.StructField("_corrupt_record", T.StringType())]
+            )
+        )
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
     )
@@ -135,23 +134,16 @@ def read_tsv_directory(
         r["_src_file"]
         for r in probe.filter(F.col("_corrupt_record").isNotNull())
         .groupBy(F.input_file_name().alias("_src_file"))
-        .agg(*[F.count(F.col(c)).alias(f"_n{i}") for i, c in enumerate(data_cols)])
+        .agg(*[F.count(F.col(c)).alias(f"_n{i}") for i, c in enumerate(columns)])
         .collect()
     ]
     for f in sorted(bad_files):
         _LOG.warning("skipping unreadable TSV file (corrupt records): %s", f)
 
-    if explicit_columns is not None:
-        out = reader.schema(
-            T.StructType([T.StructField(c, T.StringType()) for c in explicit_columns])
-        ).csv(path)
-    else:
-        out = reader.option("inferSchema", False).csv(path)
+    out = probe
     if bad_files:
-        out = out.withColumn("_src_file", F.input_file_name()).filter(
-            ~F.col("_src_file").isin(bad_files)
-        ).drop("_src_file")
-    return out
+        out = out.filter(~F.input_file_name().isin(bad_files))
+    return out.drop("_corrupt_record")
 
 
 def write_tsv(
@@ -187,10 +179,7 @@ def _prepend_bom(path: str) -> None:
     mutating the file in place invalidates the checksum and would make any
     later Spark read of the directory fail with ChecksumException.
     """
-    for part in set(
-        glob.glob(os.path.join(path, "**", "part-*.csv"), recursive=True)
-        + glob.glob(os.path.join(path, "part-*.csv"))
-    ):
+    for part in part_files(path):
         with open(part, "rb") as f:
             data = f.read()
         if not data.startswith(b"\xef\xbb\xbf"):
@@ -199,3 +188,8 @@ def _prepend_bom(path: str) -> None:
             crc = os.path.join(os.path.dirname(part), f".{os.path.basename(part)}.crc")
             if os.path.exists(crc):
                 os.remove(crc)
+
+
+def part_files(path: str) -> list[str]:
+    """The written part files under ``path``, flat or partitioned, sorted."""
+    return sorted(glob.glob(os.path.join(path, "**", "part-*.csv"), recursive=True))

@@ -8,6 +8,7 @@ import glob
 import io
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from monthly_report_etl_spark.config import PipelineConfig
@@ -526,3 +527,123 @@ def test_get_spark_default_master_follows_host_cores(monkeypatch):
     session.get_spark()
     assert seen["master"] == "local[2]"
     assert seen["spark.sql.shuffle.partitions"] == "2"
+
+
+def _export_paths(fixture_dir):
+    return (
+        os.path.join(fixture_dir, "exports_deals.parquet"),
+        os.path.join(fixture_dir, "competitor_list.csv"),
+    )
+
+
+@pytest.mark.parametrize("dual_sink", [False, True], ids=["tsv_only", "dual_sink"])
+def test_export_job_empty_window_fails_s7(spark, fixture_dir, tmp_path, dual_sink):
+    """A report window with no rows writes no part file; S7 must say the
+    output is empty (not fail on a schema it cannot infer from nothing)."""
+    deals, comp = _export_paths(fixture_dir)
+    cfg = PipelineConfig("2001-01-01T00:00:00Z", "2001-02-01T00:00:00Z", "2001-02-01")
+    kw = {"parquet_dir": str(tmp_path / "pq")} if dual_sink else {}
+    with pytest.raises(ValueError, match="is empty"):
+        run_export_job(spark, deals, comp, str(tmp_path / "tsv"), cfg, **kw)
+
+
+def test_s7_counts_ride_the_tsv_only_export(spark, fixture_dir, tmp_path, monkeypatch):
+    """The TSV-only export validates its output, with the row count taken
+    on the write itself."""
+    from monthly_report_etl_spark import jobs
+
+    seen = []
+    real = jobs.validate_tsv_output
+
+    def spy(path, written):
+        seen.append((path, written.get["n_rows"]))
+        return real(path, written)
+
+    monkeypatch.setattr(jobs, "validate_tsv_output", spy)
+    deals, comp = _export_paths(fixture_dir)
+    out_dir = str(tmp_path / "tsv")
+    report = run_export_job(spark, deals, comp, out_dir, PipelineConfig())
+    assert seen == [(out_dir, report.count())]
+
+
+def test_s7_rejects_fully_blank_row(spark, tmp_path):
+    """A written row whose every column is NULL or '' (both are an empty
+    field in the sink) fails validation."""
+    from monthly_report_etl_spark.jobs import _write_validated_tsv
+
+    df = spark.createDataFrame([("a", 1), (None, None), ("", None)], "s string, n int")
+    with pytest.raises(ValueError, match="2 rows with every column NULL or ''"):
+        _write_validated_tsv(df, str(tmp_path / "out"), single_file=True)
+
+
+class _Written:
+    """Stands in for the write's Observation: one good row counted."""
+
+    get = {"n_rows": 1, "n_blank": 0}
+
+
+def _part(root, rel, text):
+    path = root / rel
+    path.parent.mkdir(parents=True, exist_ok=True)
+    path.write_text("\ufeff" + text)  # the sink's utf-8-sig BOM
+
+
+def test_s7_read_back_checks_header_and_first_row_arity(tmp_path):
+    from monthly_report_etl_spark.jobs import validate_tsv_output
+
+    good = tmp_path / "good"
+    _part(good, "associated_lender=a/part-00000.csv", '"k"\t"v"\n"1"\t"x\\"\ty"\n')
+    _part(good, "associated_lender=b/part-00000.csv", '"k"\t"v"\n"2"\t"line\nbreak"\n')
+    validate_tsv_output(str(good), _Written())
+
+    short = tmp_path / "short"
+    _part(short, "part-00000.csv", '"k"\t"v"\n"1"\n')
+    with pytest.raises(ValueError, match="has 1 fields, header has 2"):
+        validate_tsv_output(str(short), _Written())
+
+    mixed = tmp_path / "mixed"
+    _part(mixed, "associated_lender=a/part-00000.csv", '"k"\t"v"\n"1"\t"x"\n')
+    _part(mixed, "associated_lender=b/part-00000.csv", '"k"\t"w"\n"2"\t"y"\n')
+    with pytest.raises(ValueError, match="differs from the other part files"):
+        validate_tsv_output(str(mixed), _Written())
+
+
+def test_skip_bad_files_drops_whole_lender_partition(spark, tmp_path):
+    """A corrupt part file under ``associated_lender=X/`` drops every row of
+    X; the other lenders are untouched and the partition column stays a
+    string column of the frame."""
+    from monthly_report_etl_spark.sources import read_tsv_directory
+
+    d = tmp_path / "by_lender"
+    _part(d, "associated_lender=a/part-00000.csv", '"k"\t"v"\n"1"\t"x"\n"2"\t"y"\n')
+    _part(d, "associated_lender=b/part-00000.csv", '"k"\t"v"\n"3"\t"z"\n"broken\n')
+    _part(d, "associated_lender=c/part-00000.csv", '"k"\t"v"\n"4"\t""\n')
+
+    df = read_tsv_directory(spark, str(d), skip_bad_files=True)
+    assert df.dtypes == [("k", "string"), ("v", "string"), ("associated_lender", "string")]
+    assert sorted(map(tuple, df.collect())) == [
+        ("1", "x", "a"), ("2", "y", "a"), ("4", None, "c"),
+    ]
+
+
+def test_merge_job_budget(spark, fixture_dir, tmp_path):
+    """The merge lists the per-lender directory on the driver and scans it
+    once: at most a header pass, the bad-file probe and the write, none of
+    them with more tasks than the session has cores."""
+    deals, comp = _export_paths(fixture_dir)
+    out_dir = str(tmp_path / "tsv")
+    run_export_job(spark, deals, comp, out_dir, PipelineConfig())
+
+    sc = spark.sparkContext
+    sc.setJobGroup("merge_budget", "merge under budget")
+    try:
+        run_merge_job(spark, out_dir, str(tmp_path / "merged"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    tasks = [
+        sum(tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds)
+        for j in tracker.getJobIdsForGroup("merge_budget")
+    ]
+    assert 0 < len(tasks) <= 3, tasks
+    assert max(tasks) <= sc.defaultParallelism, tasks
