@@ -56,11 +56,14 @@ def run_export_job(
     Dual-sink economy (r7): the report plan is computed ONCE. When both
     sinks are requested, the result is staged as parquet first and BOTH
     the TSV write and the sized parquet write read the staged scan —
-    the naive ``write_tsv(report); write_parquet_compacted(report)``
+    the naive ``write_tsv(report); write_parquet_sized(report)``
     sequence executed the full join/agg plan twice, which at 100 TB
     doubles the dominant cost for a report-sized output.
 
-    Returns the report DataFrame (lazy; the writes are the only actions).
+    Returns the report DataFrame. Besides the writes, building the report
+    plan runs the shuffle stages below its two local checkpoints (the
+    deduped passing set and the enriched rows), which adaptive execution
+    materializes when the checkpoint is taken.
     """
     import shutil
 

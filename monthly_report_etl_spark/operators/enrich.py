@@ -93,6 +93,9 @@ def add_rank_columns(df: DataFrame, config: PipelineConfig) -> DataFrame:
         .filter(F.col("Tier").isNotNull() & F.col("exportedLender").isNotNull())
         .groupBy(F.col("Tier"), F.col("exportedLender"), month.alias("month"))
         .agg(F.count("scenarioId").alias("scenario_count"))
+        # at most #tiers x #lenders x 3 rows: on one partition, the rank
+        # window and the pivot below need no exchange of their own
+        .coalesce(1)
     )
     rank = F.rank().over(
         Window.partitionBy("Tier", "month").orderBy(F.desc("scenario_count"))

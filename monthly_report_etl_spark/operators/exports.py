@@ -2,7 +2,8 @@
 
 Each function is one pure DataFrame→DataFrame step mirroring one CTE of
 /root/reference/exports_results.sql (cited per function). Composition stays
-a single lazy Catalyst plan; nothing is collected.
+lazy and nothing is collected; ``exports_pipeline`` cuts the plan once, at
+the deduped passing set, with a local checkpoint (see there).
 
 Scale design (100 TB):
 
@@ -11,8 +12,8 @@ Scale design (100 TB):
   dropped immediately, so the wide JSON never rides through shuffles.
 * Dedup is ONE hash aggregation keyed by ``scenarioId`` (one shuffle with
   map-side partial aggregation).
-* Global denominators are computed as tiny aggregates joined back via
-  broadcast — never a single-partition window (SURVEY §2.5 W1-W3).
+* Global denominators are one tiny aggregate joined back via broadcast —
+  never a single-partition window over the rows (SURVEY §2.5 W1-W3).
 * The reference's per-lender loop (48 full re-runs of the query,
   run_exports_query.py:208-218) collapses into ONE pass: a broadcast
   cross join against the ~48-row lender list with a per-row array lookup —
@@ -199,37 +200,44 @@ def global_stats(df: DataFrame) -> DataFrame:
     ``OVER (PARTITION BY loanPurpose)`` / ``SUM(...) OVER ()``
     (exports_results.sql:107-115). Spark windows cannot take DISTINCT, and
     an empty-partition window funnels ALL data through one partition — a
-    100 TB non-starter. Faithful rewrite: tiny aggregates broadcast back.
+    100 TB non-starter. Faithful rewrite: one tiny aggregate broadcast back.
 
-    ONE aggregation pass serves all three denominators: the per-purpose
-    aggregate (keyed by loanPurpose, map-side partials) also yields the
-    global count/sum by re-aggregating its ≤#purposes rows — valid because
-    step 2 guarantees one row per scenarioId, so scenarios never span two
-    purposes and per-group distinct counts add up. (A second full-input
-    branch would re-execute the entire upstream dedup — Spark shares no
-    diamond subplans — measured at ~2x the whole pipeline's cost.)
+    ONE aggregate over the rows, keyed by loanPurpose, yields all three
+    denominators. Step 2 leaves one row per scenarioId, so a scenario never
+    spans two purposes: the distinct count is a plain ``count``, and the
+    per-purpose counts and sums add up to the global ones. The ≤#purposes
+    per-purpose rows are re-aggregated on one partition into the global
+    totals (per-purpose sums first, then their total) and exploded back,
+    so each denominator row carries its purpose's count and both totals.
 
     NULL loanPurpose groups together under PARTITION BY, so the join back
-    is null-safe (``eqNullSafe``). Both joined sides are broadcast: no
-    shuffle of the big side at any scale.
+    is null-safe (``eqNullSafe``) and broadcast: no shuffle of the big side
+    at any scale. ``df`` is read twice (the aggregate and the join's stream
+    side); ``exports_pipeline`` hands in a materialized set, so the second
+    read does not re-run the dedup.
     """
     per_purpose = df.groupBy(F.col("loanPurpose").alias("_lp")).agg(
-        F.countDistinct("scenarioId").alias("count_all_loan_purpose"),
+        F.count("scenarioId").alias("count_all_loan_purpose"),
         F.sum("totalProposedLoanAmount").alias("_sum_lp"),
     )
-    totals = per_purpose.agg(
-        F.sum("count_all_loan_purpose").alias("count_all_unique_scenario_id"),
-        F.sum("_sum_lp").alias("sum_all_total_proposed_loan_amount"),
-    )
-    return (
-        df.crossJoin(F.broadcast(totals))
-        .join(
-            F.broadcast(per_purpose.drop("_sum_lp")),
-            F.col("loanPurpose").eqNullSafe(F.col("_lp")),
-            "left",
+    denominators = (
+        per_purpose.coalesce(1)
+        .agg(
+            F.collect_list(F.struct("_lp", "count_all_loan_purpose")).alias("_by_lp"),
+            F.sum("count_all_loan_purpose").alias("count_all_unique_scenario_id"),
+            F.sum("_sum_lp").alias("sum_all_total_proposed_loan_amount"),
         )
-        .drop("_lp")
+        .select(
+            F.inline("_by_lp"),
+            "count_all_unique_scenario_id",
+            "sum_all_total_proposed_loan_amount",
+        )
     )
+    return df.join(
+        F.broadcast(denominators),
+        F.col("loanPurpose").eqNullSafe(F.col("_lp")),
+        "left",
+    ).drop("_lp")
 
 
 def get_lenders(raw_df: DataFrame) -> DataFrame:
@@ -377,17 +385,18 @@ def exports_pipeline(
     end_date: str,
     lenders: DataFrame | None = None,
     sort: str = "within_partitions",
-    cache_dedup: bool = False,
 ) -> DataFrame:
     """Steps 1-7 composed — semantically the union of the reference's
-    per-lender runs over every distinct lender, as ONE Catalyst plan.
+    per-lender runs over every distinct lender.
 
-    ``cache_dedup=True`` persists the deduped/filtered intermediate
-    (MEMORY_AND_DISK): ``global_stats`` necessarily references it twice
-    (main path + denominator aggregate) and Spark re-executes unshared
-    diamond branches. The deduped set is the smallest point of the
-    pipeline (one row per scenario), so this is the natural persist
-    boundary for repeated consumption.
+    The passing-scenario set (after step 4) is materialized once with
+    ``localCheckpoint(eager=False)``: ``global_stats`` reads it twice (the
+    denominator aggregate and the main path), and Spark shares no diamond
+    subplans, so without the boundary the scan, the JSON parse and the
+    dedup aggregation ran once per read. It is the smallest point of the
+    pipeline (one row per scenario). Under adaptive execution the call
+    runs the dedup's map stage at once; the rest stays lazy until the
+    first action.
     """
     if lenders is None:
         lenders = get_lenders(raw_df)
@@ -395,10 +404,7 @@ def exports_pipeline(
     df = dedup_latest(df)
     df = flag_failing(df)
     df = filter_passing(df)
-    if cache_dedup:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df = df.localCheckpoint(eager=False)
     df = global_stats(df)
     df = explode_lender_results(df, lenders)
     df = extract_performance(df)

@@ -41,20 +41,21 @@ def monthly_report(
     df = exports.exports_pipeline(raw_df, config.start_date, config.end_date, sort="none")
     df = enrich_with_tiers(df, competitor_df)
     # add_rank_columns consumes its input twice (rank-universe aggregate +
-    # merge-back), and Spark shares no diamond subplans: profiled at bench
-    # scale (r20), the rank step re-executed the whole scan→dedup→explode→
-    # classify→tiers chain a second time, tripling the plan's cost (1.7s →
-    # 4.8s warm). localCheckpoint(eager=False) materializes the enriched
-    # rows ONCE (executor-local, lazily at first action) so both branches
-    # read them back — interleaved A/B at sf0.1: 6.59s → 5.49s median
-    # (-17%), 6.10s → 4.65s min. The materialized set is report-sized (the
-    # job's own output, which export jobs write to a sink anyway), so the
-    # disk cost is output-scale, not input-scale. An earlier experiment
-    # with .persist() doubled wall time — persist routes through the
-    # CacheManager (plan-matching, block eviction accounting) where
-    # localCheckpoint is a plain RDD materialization; on a multi-node
-    # cluster swap for reliable checkpoint() if executor loss must be
-    # survivable mid-job.
+    # merge-back), and Spark shares no diamond subplans: without a cut the
+    # rank step re-runs the explode→classify→tiers chain above the
+    # exports pipeline's materialized passing set.
+    # localCheckpoint(eager=False) materializes the enriched rows ONCE
+    # (executor-local) so both branches read them back; under adaptive
+    # execution the call runs the upstream shuffle stages at once, the
+    # rest at the first action. A/B, monthly_1k job_cpu_s (4-core host, 4
+    # interleaved pairs): 9.48 s without it → 8.25 s median with it, lower
+    # in 3 of 4 pairs. The materialized set is report-sized (the job's own
+    # output, which export jobs write to a sink anyway), so the disk cost
+    # is output-scale, not input-scale. .persist() doubled wall time in an
+    # earlier experiment — it routes through the CacheManager
+    # (plan-matching, block eviction accounting) where localCheckpoint is a
+    # plain RDD materialization; on a multi-node cluster swap for reliable
+    # checkpoint() if executor loss must be survivable mid-job.
     df = df.localCheckpoint(eager=False)
     df = add_rank_columns(df, config)
     if clean:

@@ -67,13 +67,15 @@ def read_tsv_directory(
 
     ``skip_bad_files=True`` reproduces the reference's per-file try/skip
     (merge_all_lenders.py:46-49 drops a whole unreadable CSV with a
-    warning and continues): a distributed tagging pass marks corrupt
-    records with their source file, only the tiny bad-FILE list crosses
-    the driver, and every row from a bad file is excluded. The returned
-    frame is that pass's own relation (bad files filtered out, the
-    corrupt-record column dropped), so the directory is listed and parsed
-    by one scan definition. With the flag off, PERMISSIVE null-fills
-    malformed rows in place.
+    warning and continues). One probe parse tags every row with its
+    source file and a corrupt-record column, and is materialized lazily
+    (``localCheckpoint(eager=False)``): the job that collects the tiny
+    bad-FILE list fills it, and the returned frame (bad files filtered
+    out, both helper columns dropped) reads it back, so the directory is
+    parsed once however often the result is consumed. The materialized
+    set holds the whole directory as rows in executor memory, spilling to
+    disk (about 2.6x the TSV bytes for the monthly export's directory).
+    With the flag off, PERMISSIVE null-fills malformed rows in place.
 
     ``multi_line=True`` makes QUOTED EMBEDDED NEWLINES roundtrip like the
     reference's pandas reader (which handles them natively). It is off by
@@ -106,13 +108,10 @@ def read_tsv_directory(
 
     # Probe pass: read with an explicit corrupt-record column; a row that
     # fails tokenization (quote damage) or disagrees with the file's data
-    # arity marks its FILE bad. The projection keeps one real data column:
-    # Spark disallows queries whose pruned schema is ONLY the corrupt column
-    # (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN). Partition
-    # columns are subtracted from the data schema by the reader (and typed
-    # string), so the arity check is per-file-content, as in the reference.
-    # Only distinct bad file NAMES cross the driver — bounded by file
-    # count, never data.
+    # arity marks its FILE bad. Partition columns are subtracted from the
+    # data schema by the reader (and typed string), so the arity check is
+    # per-file-content, as in the reference. Only distinct bad file NAMES
+    # cross the driver — bounded by file count, never data.
     probe = (
         reader.schema(
             T.StructType(
@@ -123,27 +122,27 @@ def read_tsv_directory(
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
     )
-    # EVERY data column is referenced through the aggregate: CSV column
-    # pruning re-scopes malformed-row detection to the required columns
-    # only (a quote-broken tail column would go unnoticed), and a scan
-    # reduced to the corrupt column alone is rejected at planning time.
-    # Full-width parsing is also the reference's semantics (pandas parses
-    # whole rows). The per-file counts are discarded; only file names and
-    # one count row per file exist beyond the scan.
+    # The checkpoint keeps EVERY data column: CSV column pruning would
+    # re-scope malformed-row detection to the required columns only (a
+    # quote-broken tail column would go unnoticed), and a scan reduced to
+    # the corrupt column alone is rejected at planning time
+    # (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN). Full-width
+    # parsing is also the reference's semantics (pandas parses whole rows).
+    tagged = probe.withColumn("_src_file", F.input_file_name()).localCheckpoint(eager=False)
     bad_files = [
         r["_src_file"]
-        for r in probe.filter(F.col("_corrupt_record").isNotNull())
-        .groupBy(F.input_file_name().alias("_src_file"))
-        .agg(*[F.count(F.col(c)).alias(f"_n{i}") for i, c in enumerate(columns)])
+        for r in tagged.filter(F.col("_corrupt_record").isNotNull())
+        .select("_src_file")
+        .distinct()
         .collect()
     ]
     for f in sorted(bad_files):
         _LOG.warning("skipping unreadable TSV file (corrupt records): %s", f)
 
-    out = probe
+    out = tagged
     if bad_files:
-        out = out.filter(~F.input_file_name().isin(bad_files))
-    return out.drop("_corrupt_record")
+        out = out.filter(~F.col("_src_file").isin(bad_files))
+    return out.drop("_corrupt_record", "_src_file")
 
 
 def write_tsv(

@@ -77,3 +77,59 @@ def test_pipeline_covers_all_performance_labels(spark, fixture_dir):
     missing = expected_labels - labels
     assert not missing, f"classifier branches never exercised: {missing}"
     assert labels <= set(exports.PERFORMANCE_LABELS)
+
+
+
+def test_global_denominators_match_pandas(spark, fixture_dir):
+    """Step 5 against pandas: the three denominators on every output row
+    equal the counts and the sum over the deduped passing set. The fixture
+    gains one passing scenario with a NULL loanPurpose and one failing
+    export whose amount would show in the total if it were counted."""
+    import json
+
+    import numpy as np
+
+    path = os.path.join(fixture_dir, "exports_deals.parquet")
+    schema = spark.read.parquet(path).schema
+    deals = pd.read_parquet(path)
+    lender = deals["exportedLender"].dropna().iloc[0]
+    extra = deals.iloc[[0, 0]].copy()
+    extra["scenarioId"] = ["scn_null_purpose", "scn_failing"]
+    extra["exportedLender"] = [lender, None]
+    extra["results"] = json.dumps(
+        [{"lenderName": lender, "doesService": "true", "maxBorrowingCapacity": 5e5}]
+    )
+    extra["loanPurpose"] = [None, "Investment"]
+    extra["totalProposedLoanAmount"] = [123456.78, 9.9e8]
+    extra["isValidExport"] = True
+    extra["time"] = pd.Timestamp("2025-03-15 12:00:00")
+    deals = pd.concat([deals, extra], ignore_index=True)
+    deals["time"] = deals["time"].astype("datetime64[us]")
+    raw = spark.createDataFrame(deals[schema.names], schema)
+
+    passing = exports.filter_passing(
+        exports.flag_failing(exports.dedup_latest(exports.base(raw, START, END)))
+    ).select("scenarioId", "loanPurpose", "totalProposedLoanAmount").toPandas()
+    assert "scn_null_purpose" in set(passing["scenarioId"])
+    assert "scn_failing" not in set(passing["scenarioId"])
+    assert passing["scenarioId"].is_unique
+    per_purpose = passing["loanPurpose"].fillna("<NULL>").value_counts()
+
+    result = exports.exports_pipeline(raw, START, END, sort="none")
+    got = result.select(
+        "scenarioId", "loanPurpose", "count_all_loan_purpose",
+        "count_all_unique_scenario_id", "sum_all_total_proposed_loan_amount",
+    ).distinct().toPandas()
+    assert set(got["scenarioId"]) == set(passing["scenarioId"])
+    expected = got["loanPurpose"].fillna("<NULL>").map(per_purpose)
+    assert (got["count_all_loan_purpose"] == expected).all()
+    assert (got["count_all_unique_scenario_id"] == len(passing)).all()
+    assert np.allclose(
+        got["sum_all_total_proposed_loan_amount"],
+        passing["totalProposedLoanAmount"].sum(),
+        rtol=1e-9,
+        atol=0,
+    )
+    # no unpartitioned Window: it logs a WARN line on every run
+    plan = result._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -223,11 +224,14 @@ def test_monthly_report_plan_shape(spark, sf_dir, tmp_path):
     """The full monthly-report plan keeps its at-scale contract: no
     range-sampling global sort, no cartesian product, no Python stage,
     and exactly ONE deliberate repartition — the per-lender
-    REPARTITION_BY_COL that feeds the sink's file layout. (Since r20 the
-    enriched frame is localCheckpoint'ed before add_rank_columns — the
-    rank diamond otherwise re-executed the whole upstream chain; the
-    pre-checkpoint plan is separately gated by the flagship
-    exports_report_events tests.)"""
+    REPARTITION_BY_COL that feeds the sink's file layout. The plan checked
+    here starts at the enriched frame's local checkpoint (taken before
+    add_rank_columns, whose diamond otherwise re-executed the whole
+    upstream chain; the exports pipeline below it materializes its
+    passing set the same way, and the flagship exports_report_events
+    tests gate an unbroken plan). Above the checkpoint, the rank count
+    aggregate is the only other exchange: the rank table sits on one
+    partition, so its window and pivot add none."""
     from monthly_report_etl_spark.config import PipelineConfig
     from monthly_report_etl_spark.fixtures import write_fixture
     from monthly_report_etl_spark.plans import monthly_report
@@ -244,6 +248,8 @@ def test_monthly_report_plan_shape(spark, sf_dir, tmp_path):
     assert "Python" not in plan, plan
     reparts = _lines(plan, "REPARTITION_BY_COL")
     assert len(reparts) == 1, f"expected exactly 1 deliberate repartition:\n{plan}"
+    exchanges = [ln for ln in plan.splitlines() if re.fullmatch(r"\(\d+\) Exchange", ln)]
+    assert len(exchanges) == 2, f"expected the rank count and the lender exchange:\n{plan}"
 
 
 def test_ann_lsh_plan_shape(spark, sf_dir):
